@@ -101,14 +101,13 @@ def _nested_stats(arr: pa.Array) -> tuple[str | None, str | None]:
       struct:          {"f:<name>": bound per child field with stats}
 
     Readers address these through virtual filter columns ``c#len``,
-    ``c#val`` and ``c#f:<field>`` (prune_files / distributed_file_plan /
-    decode_store residuals). Existential semantics make the flattened
-    value range sound for pruning: a chunk can hold a row with SOME
-    element matching iff the [min,max] of all elements could match —
-    the same rule a scalar column's zone map already uses. The object
-    form never collides with scalar stats on the read side: scalar
-    numeric stats try_cast to null on '{', and the string path guards
-    on a leading '"'."""
+    ``c#val`` and ``c#f:<field>`` (prune_files / decode_store
+    residuals). Existential semantics make the flattened value range
+    sound for pruning: a chunk can hold a row with SOME element matching
+    iff the [min,max] of all elements could match — the same rule a
+    scalar column's zone map already uses. The object form never
+    collides with scalar stats on the read side: prune_files reads an
+    accessor's bound only out of a JSON object."""
     t = arr.type
     nn = arr.drop_null() if arr.null_count else arr
     if len(nn) == 0:
@@ -337,19 +336,45 @@ def _write_chunk(chunks_dir: str, pid: int, seq: int, table: pa.Table,
     return rows
 
 
-def _encode_task_factory(chunks_dir: str, run_id: str, chunk_rows: int,
-                         chunk_bytes: int, overrides: dict | None = None,
-                         group_cols: list[str] | None = None,
-                         manifests_dir: str | None = None):
+def _manifest_shard(manifests_dir: str, run_id: str, tag: str,
+                    out_rows: list[dict]) -> pa.RecordBatch:
+    """Persist a task's chunk-level manifest rows as a parquet SHARD
+    executor-side and return only its pid-level rollup (rows counted once
+    per pid via the first data column, matching EncodeResult's row
+    accounting). Chunk-level rows scale with the data (one per chunk
+    column) and must never be collected to the driver at corpus scale;
+    the rollup is bounded by num_pids."""
+    import pyarrow.parquet as pq
+    man = pa.table({f.name: [r[f.name] for r in out_rows]
+                    for f in MANIFEST_SCHEMA}, schema=MANIFEST_SCHEMA)
+    shard = f"manifest-shard-{run_id[:8]}-{tag}.parquet"
+    pq.write_table(man, os.path.join(manifests_dir, shard))
+    first_col = out_rows[0]["column"]
+    agg: dict[int, list] = {}
+    for r in out_rows:
+        a = agg.setdefault(r["pid"], [0, 0, 0, 0])
+        a[0] += r["rows"] if r["column"] == first_col else 0
+        a[1] += r["bytes_in"]
+        a[2] += r["bytes_out"]
+        a[3] += 1
+    return pa.RecordBatch.from_pydict({
+        "shard_file": [shard] * len(agg),
+        "pid": list(agg),
+        "rows": [a[0] for a in agg.values()],
+        "bytes_in": [a[1] for a in agg.values()],
+        "bytes_out": [a[2] for a in agg.values()],
+        "chunks": [a[3] for a in agg.values()],
+    }, schema=SUMMARY_SCHEMA)
+
+
+def _encode_task_factory(chunks_dir: str, manifests_dir: str, run_id: str,
+                         chunk_rows: int, chunk_bytes: int,
+                         overrides: dict | None = None,
+                         group_cols: list[str] | None = None):
     """Build the mapInArrow function. Accumulates per-pid batch slices and
     flushes a chunk when either budget trips; all slicing is zero-copy.
-
-    With ``manifests_dir`` set (the sharded-manifest mode), each task
-    writes its chunk-level manifest rows as a parquet SHARD executor-side
-    and yields only a pid-level rollup — chunk-level rows scale with the
-    data (one per chunk column) and must never be collected to the
-    driver at corpus scale. Without it, manifest rows are yielded whole
-    (driver-collected single-manifest commit, fine for small jobs)."""
+    Each task writes its manifest rows as one shard (_manifest_shard)
+    and yields only the pid rollup."""
 
     def task(batches):
         from pyspark import TaskContext
@@ -410,36 +435,8 @@ def _encode_task_factory(chunks_dir: str, run_id: str, chunk_rows: int,
                         flush(pid)
         for pid in list(acc):
             flush(pid)
-        if not out_rows:
-            return
-        cols = {f.name: [r[f.name] for r in out_rows]
-                for f in MANIFEST_SCHEMA}
-        man = pa.table(cols, schema=MANIFEST_SCHEMA)
-        if manifests_dir is None:
-            yield from man.to_batches(max_chunksize=1 << 20)
-            return
-        # sharded mode: persist the chunk-level rows executor-side, report
-        # only the pid rollup (rows counted once per pid via the first
-        # data column, matching EncodeResult's row accounting)
-        import pyarrow.parquet as pq
-        shard = f"manifest-shard-{run_id[:8]}-{tag}.parquet"
-        pq.write_table(man, os.path.join(manifests_dir, shard))
-        first_col = out_rows[0]["column"]
-        agg: dict[int, list] = {}
-        for r in out_rows:
-            a = agg.setdefault(r["pid"], [0, 0, 0, 0])
-            a[0] += r["rows"] if r["column"] == first_col else 0
-            a[1] += r["bytes_in"]
-            a[2] += r["bytes_out"]
-            a[3] += 1
-        yield pa.RecordBatch.from_pydict({
-            "shard_file": [shard] * len(agg),
-            "pid": list(agg),
-            "rows": [a[0] for a in agg.values()],
-            "bytes_in": [a[1] for a in agg.values()],
-            "bytes_out": [a[2] for a in agg.values()],
-            "chunks": [a[3] for a in agg.values()],
-        }, schema=SUMMARY_SCHEMA)
+        if out_rows:
+            yield _manifest_shard(manifests_dir, run_id, tag, out_rows)
 
     return task
 
@@ -525,7 +522,6 @@ def encode_dataframe(
     codec_overrides: dict | None = None,
     num_tasks: int | None = None,
     colocate: str = "shuffle",
-    manifest: str = "sharded",
     sort_by: list[str] | None = None,
     zorder_by: list[str] | None = None,
     zorder_stats_sample: float | None = None,
@@ -558,13 +554,6 @@ def encode_dataframe(
         unchanged: a commit only ever happens after the whole job, so a
         committed pid has ALL its rows encoded in either mode and the
         pid anti-filter applies identically.
-    manifest: "sharded" (default) writes chunk-level manifest rows as
-      parquet shards executor-side — only shard names and a pid-level
-      rollup (bounded by num_pids) reach the driver, so the commit cost
-      does not scale with the data. "collect" gathers manifest rows to
-      the driver and writes one manifest file per commit (fewer files;
-      fine for small jobs). Both produce identical store semantics —
-      readers concat all manifest files a snapshot references.
     sort_by: Iceberg-style write sort order (write.sort-order). A
       task-local sort (sortWithinPartitions — NO extra shuffle) orders
       each pid's rows by these columns before chunking, so every chunk
@@ -590,9 +579,11 @@ def encode_dataframe(
       chunks only, GC-able). Costs one extra column-pruned pass over
       ``df`` to collect the distinct keys (driver-held, like every delete
       file — right for CDC-size batches; rewrite the corpus via
-      compaction instead of upserting all of it). Requires
-      ``resume=False``: the pid-level resume filter would silently skip
-      batch rows landing in already-committed pids.
+      compaction instead of upserting all of it). Keys match by value
+      with NULL equal to NULL, so a batch row with a null key replaces
+      the prior null-key rows. Requires ``resume=False``: the pid-level
+      resume filter would silently skip batch rows landing in
+      already-committed pids.
     """
     t0 = time.time()
     spark = df.sparkSession
@@ -697,51 +688,28 @@ def encode_dataframe(
         upsert_delete = (df.select(upsert_key).distinct().toArrow()
                          .rename_columns([upsert_key]), upsert_key)
 
+    # chunk-level manifest rows stay executor-side as one parquet shard
+    # per task; only shard names and the pid rollup reach the driver, so
+    # the commit cost does not scale with the data
     import pyarrow.compute as pc
-    if manifest == "sharded":
-        task = _encode_task_factory(store.chunks_dir, run_id, chunk_rows,
-                                    chunk_bytes, codec_overrides,
-                                    partition_by, store.manifests_dir)
-        summaries = work.mapInArrow(task, _summary_ddl()).toArrow() \
-            .cast(SUMMARY_SCHEMA)
-        if summaries.num_rows == 0 and not committed:
-            raise ValueError("nothing to encode: input DataFrame is empty")
-        shard_files = sorted(set(summaries.column("shard_file").to_pylist()))
-        new_pids = set(summaries.column("pid").to_pylist())
-        snap = store.commit(shard_files, _spark_to_arrow_schema(df), run_id,
-                            new_pids=new_pids, add_delete=upsert_delete,
-                            branch=branch)
-        bi = pc.sum(summaries.column("bytes_in")).as_py() or 0
-        bo = pc.sum(summaries.column("bytes_out")).as_py() or 0
-        rows = pc.sum(summaries.column("rows")).as_py() or 0
-        return EncodeResult(
-            snapshot=snap, rows=rows, bytes_in=bi, bytes_out=bo,
-            seconds=time.time() - t0, pids_encoded=len(new_pids),
-            pids_skipped=len(committed),
-        )
-    if manifest != "collect":
-        raise ValueError(f"manifest must be 'sharded' or 'collect': "
-                         f"{manifest}")
-    task = _encode_task_factory(store.chunks_dir, run_id, chunk_rows,
-                                chunk_bytes, codec_overrides, partition_by)
-    manifest_df = work.mapInArrow(task, _manifest_ddl())
-    manifest_rows = manifest_df.toArrow().cast(MANIFEST_SCHEMA)
-    if manifest_rows.num_rows == 0 and not committed:
+    task = _encode_task_factory(store.chunks_dir, store.manifests_dir,
+                                run_id, chunk_rows, chunk_bytes,
+                                codec_overrides, partition_by)
+    summaries = work.mapInArrow(task, _summary_ddl()).toArrow() \
+        .cast(SUMMARY_SCHEMA)
+    if summaries.num_rows == 0 and not committed:
         raise ValueError("nothing to encode: input DataFrame is empty")
-
-    snap = store.commit(manifest_rows, _spark_to_arrow_schema(df), run_id,
-                        add_delete=upsert_delete, branch=branch)
-
-    bi = pc.sum(manifest_rows.column("bytes_in")).as_py() or 0
-    bo = pc.sum(manifest_rows.column("bytes_out")).as_py() or 0
-    first_col = df.columns[0]
-    rows = pc.sum(manifest_rows.filter(
-        pc.equal(manifest_rows.column("column"), first_col)
-    ).column("rows")).as_py() or 0
+    shard_files = sorted(set(summaries.column("shard_file").to_pylist()))
+    new_pids = set(summaries.column("pid").to_pylist())
+    snap = store.commit(shard_files, _spark_to_arrow_schema(df), run_id,
+                        new_pids=new_pids, add_delete=upsert_delete,
+                        branch=branch)
+    bi = pc.sum(summaries.column("bytes_in")).as_py() or 0
+    bo = pc.sum(summaries.column("bytes_out")).as_py() or 0
+    rows = pc.sum(summaries.column("rows")).as_py() or 0
     return EncodeResult(
         snapshot=snap, rows=rows, bytes_in=bi, bytes_out=bo,
-        seconds=time.time() - t0,
-        pids_encoded=len(set(manifest_rows.column("pid").to_pylist())),
+        seconds=time.time() - t0, pids_encoded=len(new_pids),
         pids_skipped=len(committed),
     )
 
@@ -749,13 +717,6 @@ def encode_dataframe(
 def _summary_ddl() -> str:
     return ("shard_file string, pid int, rows long, bytes_in long,"
             " bytes_out long, chunks long")
-
-
-def _manifest_ddl() -> str:
-    return ("chunk_file string, pid int, seq int, column string, codec string,"
-            " params string, rows long, nulls long, bytes_in long,"
-            " bytes_out long, offset long, length long, sha256 string,"
-            " run_id string, stat_min string, stat_max string, bloom string")
 
 
 def _spark_to_arrow_schema(df: DataFrame) -> pa.Schema:

@@ -1,7 +1,7 @@
 """Table maintenance: row-level deletes (merge-on-read) and compaction.
 
 The Iceberg maintenance surface for the chunk store: `delete_rows` commits
-an equality-delete file (data chunks untouched; readers anti-join the keys),
+an equality-delete file (data chunks untouched; readers drop matching keys),
 `compact_store` materializes deletes + rewrites the store into right-sized
 chunks under a fresh snapshot lineage, and `rewrite_small_chunks` is the
 in-place incremental variant (rewrite_data_files binpack): only fragmented
@@ -22,8 +22,10 @@ def delete_rows(store_dir: str, keys: DataFrame, key_col: str,
 
     `keys` is a (small) DataFrame holding the key column; only metadata
     plus the key list touch the driver. O(1) in data size — no chunk is
-    rewritten; decode anti-joins the keys until compaction materializes
-    them.
+    rewritten; every reader drops the matching rows (read_live_chunk)
+    until compaction materializes the delete. Keys match by value with
+    NULL equal to NULL: a null among ``keys`` deletes the rows whose key
+    is null.
     """
     import uuid
     store = ChunkStore(store_dir)
@@ -203,20 +205,14 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
 
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
+    from omi_cpp_parquet_wide_record_spark.operators.decode import ScanPlan
     from omi_cpp_parquet_wide_record_spark.operators.encode import (
-        SUMMARY_SCHEMA, _summary_ddl, _write_chunk,
-    )
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        MANIFEST_SCHEMA,
+        SUMMARY_SCHEMA, _manifest_shard, _summary_ddl, _write_chunk,
     )
 
-    store = ChunkStore(store_dir)
-    snap = store.current_snapshot()
-    if snap is None:
-        raise FileNotFoundError(f"no committed snapshot under {store_dir}")
-    schema = store.arrow_schema(snap)
+    plan = ScanPlan(store_dir)
+    store, snap, schema = plan.store, plan.snap, plan.schema
     m = store.manifest_table(snap, with_commit_n=True)   # live view
     if m.num_rows == 0:
         return {"rewritten_pids": [], "chunks_before": 0, "chunks_after": 0}
@@ -255,16 +251,7 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
     for v in per_pid.values():
         v.sort(key=lambda t: (t[1], t[0]))
 
-    # delete-file keys are physical names at delete time; resolve to the
-    # live name for filtering the alias-resolved (live-named) tables
-    aliases = ChunkStore.alias_map(snap)
-    _live_of = {old: live for live, olds in aliases.items()
-                for old in olds}
-    deletes = [(os.path.join(store.deletes_dir, d["file"]), d["key"],
-                _live_of.get(d["key"], d["key"]),
-                int(d["n"]) if d.get("n") is not None else None)
-               for d in store.delete_files(snap)
-               if _live_of.get(d["key"], d["key"]) in schema.names]
+    aliases, deletes = plan.aliases, plan.deletes
     run_id = uuid.uuid4().hex
     chunks_dir, manifests_dir = store.chunks_dir, store.manifests_dir
     schema_ipc = schema.serialize().to_pybytes()
@@ -273,7 +260,7 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
         from pyspark import TaskContext
 
         from omi_cpp_parquet_wide_record_spark.operators.decode import (
-            read_chunk_table,
+            read_live_chunk,
         )
         tc = TaskContext.get()
         tag = (f"{run_id[:8]}-rw{tc.taskAttemptId() if tc else 0}-"
@@ -288,20 +275,12 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
                 for fname, n_f in _json.loads(files_js):
                     # alias-aware read: pre-rename chunks decode their
                     # retired names into the live schema (the rewrite
-                    # physically migrates them to live names)
-                    t = read_chunk_table(os.path.join(chunks_dir, fname),
-                                         sch, aliases)
-                    # MATERIALIZE merge-on-read deletes: the rewritten
-                    # chunks carry this commit's n, which EXEMPTS them
-                    # from older deletes — so those deletes must be
-                    # applied to the bytes now
-                    for dpath, key, live_key, dn in deletes:
-                        if dn is not None and n_f >= dn:
-                            continue     # delete doesn't scope this chunk
-                        keys = pq.read_table(dpath, columns=[key])
-                        t = t.filter(pc.invert(pc.is_in(
-                            t.column(live_key), value_set=keys.column(key)
-                            .combine_chunks())))
+                    # physically migrates them to live names). Deletes
+                    # are MATERIALIZED: the rewritten chunks carry this
+                    # commit's n, which EXEMPTS them from older deletes,
+                    # so those deletes must be applied to the bytes now
+                    t = read_live_chunk(os.path.join(chunks_dir, fname),
+                                        sch, aliases, deletes, n_f)
                     if t.num_rows:
                         parts.append(t)
                 if not parts:
@@ -315,29 +294,8 @@ def rewrite_small_chunks(spark: SparkSession, store_dir: str,
                         chunks_dir, pid, seq,
                         tbl.slice(off, target_rows),
                         plan_cache, run_id, tag))
-        if not out_rows:
-            return
-        cols = {f.name: [r[f.name] for r in out_rows]
-                for f in MANIFEST_SCHEMA}
-        man = pa.table(cols, schema=MANIFEST_SCHEMA)
-        shard = f"manifest-shard-{run_id[:8]}-{tag}.parquet"
-        pq.write_table(man, os.path.join(manifests_dir, shard))
-        first_col = out_rows[0]["column"]
-        agg: dict[int, list] = {}
-        for r in out_rows:
-            a = agg.setdefault(r["pid"], [0, 0, 0, 0])
-            a[0] += r["rows"] if r["column"] == first_col else 0
-            a[1] += r["bytes_in"]
-            a[2] += r["bytes_out"]
-            a[3] += 1
-        yield pa.RecordBatch.from_pydict({
-            "shard_file": [shard] * len(agg),
-            "pid": list(agg),
-            "rows": [a[0] for a in agg.values()],
-            "bytes_in": [a[1] for a in agg.values()],
-            "bytes_out": [a[2] for a in agg.values()],
-            "chunks": [a[3] for a in agg.values()],
-        }, schema=SUMMARY_SCHEMA)
+        if out_rows:
+            yield _manifest_shard(manifests_dir, run_id, tag, out_rows)
 
     rows = [(p, _json.dumps(fs)) for p, fs in sorted(per_pid.items())]
     fdf = spark.createDataFrame(rows, "pid int, files string").repartition(

@@ -442,56 +442,52 @@ class ChunkStore:
         delete reads derive per-chunk epochs from this instead of
         re-reading every manifest parquet on the driver (VERDICT r4 #6)."""
         snap = snapshot or self.current_snapshot()
+        tables = [t for m in (snap or {}).get("manifests", [])
+                  if (t := self.manifest_part(snap, m, with_commit_n))
+                  .num_rows]
+        if tables:
+            return pa.concat_tables(tables)
         empty = MANIFEST_SCHEMA.empty_table()
         if with_commit_n:
             empty = empty.append_column(
                 "commit_n", pa.array([], type=pa.int32()))
-        if not snap or not snap["manifests"]:
-            return empty
-        tables = []
-        for m in snap["manifests"]:
-            t = pq.read_table(os.path.join(self.manifests_dir, m))
-            # manifests written before the zone-map columns: pad with nulls
-            for f in MANIFEST_SCHEMA:
-                if f.name not in t.schema.names:
-                    t = t.append_column(
-                        f.name, pa.nulls(t.num_rows, type=f.type))
-            t = t.select(MANIFEST_SCHEMA.names)
-            dropped = self.rewritten_pids_for(snap, m)
-            if dropped:
-                import pyarrow.compute as pc
-                t = t.filter(pc.invert(pc.is_in(
-                    t.column("pid"),
-                    value_set=pa.array(sorted(dropped),
-                                       type=t.schema.field("pid").type))))
-            if t.num_rows == 0:
-                continue
-            if with_commit_n:
-                n = self.manifest_commit_n(snap, m)
-                t = t.append_column("commit_n", pa.array(
-                    [n] * t.num_rows, type=pa.int32()))
-            tables.append(t)
-        if not tables:
-            return empty
-        out = pa.concat_tables(tables)
+        return empty
+
+    def manifest_part(self, snap: dict, manifest_name: str,
+                      with_commit_n: bool = False) -> pa.Table:
+        """The live rows of ONE manifest of ``snap``: the unit both
+        manifest_table (driver) and distributed scan planning (one task
+        per manifest) build on. Every chunk file's rows live in exactly
+        one manifest, so per-manifest results concatenate exactly."""
+        import pyarrow.compute as pc
+        t = pq.read_table(os.path.join(self.manifests_dir, manifest_name))
+        # manifests written before the zone-map columns: pad with nulls
+        for f in MANIFEST_SCHEMA:
+            if f.name not in t.schema.names:
+                t = t.append_column(f.name, pa.nulls(t.num_rows, type=f.type))
+        t = t.select(MANIFEST_SCHEMA.names)
+        dropped = self.rewritten_pids_for(snap, manifest_name)
+        if dropped:
+            t = t.filter(pc.invert(pc.is_in(
+                t.column("pid"), value_set=pa.array(
+                    sorted(dropped), type=t.schema.field("pid").type))))
+        if with_commit_n:
+            n = self.manifest_commit_n(snap, manifest_name)
+            t = t.append_column("commit_n", pa.array(
+                [n] * t.num_rows, type=pa.int32()))
         # schema evolution: canonicalize retired physical column names to
-        # their live names, so every driver-side consumer (zone/bloom/null
-        # pruning, metrics, rewrite selection) sees ONE logical column per
-        # live name — pre-rename chunks keep pruning after the rename
+        # their live names, so every consumer (zone/bloom/null pruning,
+        # metrics, rewrite selection) sees ONE logical column per live
+        # name — pre-rename chunks keep pruning after the rename
         aliases = self.alias_map(snap)
-        if aliases:
-            import pyarrow.compute as pc
-            col = out.column("column")
+        if aliases and t.num_rows:
+            col = t.column("column")
             for live, olds in aliases.items():
-                col = pc.if_else(
-                    pc.is_in(col, value_set=pa.array(olds)),
-                    pa.scalar(live), col)
-            out = out.set_column(out.schema.get_field_index("column"),
-                                 out.schema.field("column"),
-                                 col.combine_chunks()
-                                 if isinstance(col, pa.ChunkedArray)
-                                 else col)
-        return out
+                col = pc.if_else(pc.is_in(col, value_set=pa.array(olds)),
+                                 pa.scalar(live), col)
+            t = t.set_column(t.schema.get_field_index("column"),
+                             t.schema.field("column"), col)
+        return t
 
     def arrow_schema(self, snapshot: dict | None = None) -> pa.Schema:
         snap = snapshot or self.current_snapshot()

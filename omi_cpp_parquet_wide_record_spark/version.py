@@ -28,6 +28,20 @@ _SURFACE = (
 )
 
 
+def _enclosing_file(path: str) -> str | None:
+    """The nearest ancestor of ``path`` that is a regular file — the zip
+    archive a zipimported package lives in — or None when there is none
+    (the walk stops at the filesystem root, where dirname is a fixed
+    point)."""
+    while True:
+        parent = os.path.dirname(path)
+        if parent == path:
+            return None
+        path = parent
+        if os.path.isfile(path):
+            return path
+
+
 def engine_fingerprint() -> str:
     """Stable 16-hex digest of the encode/decode-relevant source files.
 
@@ -83,10 +97,7 @@ def engine_fingerprint() -> str:
             # under <pkg>/<entry>/
             try:
                 import zipfile
-                archive = os.path.dirname(pkg_root)
-                while archive and not os.path.isfile(archive):
-                    archive = os.path.dirname(archive)
-                with zipfile.ZipFile(archive) as zf:
+                with zipfile.ZipFile(_enclosing_file(pkg_root)) as zf:
                     want = pkg_prefix + entry + "/"
                     for name in zf.namelist():
                         if name.startswith(want) and name.endswith(".py"):

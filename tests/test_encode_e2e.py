@@ -25,6 +25,14 @@ def corpus(spark):
     return FX.web_pages_df(spark, ROWS, partitions=4).cache()
 
 
+def _distributed_files(spark, out, filters=None) -> list[str]:
+    """The chunk files distributed planning opens: ScanPlan.files_df runs
+    prune_files once per manifest inside Spark tasks."""
+    from omi_cpp_parquet_wide_record_spark.operators.decode import ScanPlan
+    return sorted(r.chunk_file for r in
+                  ScanPlan(out, filters=filters).files_df(spark).collect())
+
+
 def test_encode_decode_bit_identical(spark, corpus, tmp_path):
     out = str(tmp_path / "store")
     res = encode_dataframe(corpus, out, partition_by=["lang"],
@@ -106,31 +114,25 @@ def test_encode_local_colocation_zero_shuffle(spark, corpus, tmp_path):
     assert "Exchange" not in plan, plan
 
 
-def test_sharded_and_collected_manifests_equivalent(spark, corpus, tmp_path):
-    """manifest='sharded' keeps chunk-level rows executor-side (only shard
-    names + a pid rollup reach the driver — the 100 TB commit path);
-    'collect' gathers them into one manifest file. Same store semantics:
-    identical metrics totals, identical decode, and the sharded snapshot
-    must reference one shard per reporting task, each carrying its commit
-    number for delete scoping."""
-    sh_dir, co_dir = str(tmp_path / "sharded"), str(tmp_path / "collect")
+def test_sharded_manifest_commit(spark, corpus, tmp_path):
+    """Encode keeps chunk-level manifest rows executor-side (only shard
+    names + a pid rollup reach the driver — the 100 TB commit path): the
+    snapshot must reference one shard per reporting task, each carrying
+    its commit number for delete scoping, and the store must roundtrip
+    and resume."""
+    sh_dir = str(tmp_path / "sharded")
     r_sh = encode_dataframe(corpus, sh_dir, partition_by=["lang"],
-                            salt_key="url", num_pids=12, salt=4,
-                            manifest="sharded")
-    r_co = encode_dataframe(corpus, co_dir, partition_by=["lang"],
-                            salt_key="url", num_pids=12, salt=4,
-                            manifest="collect")
-    assert (r_sh.rows, r_sh.bytes_in, r_sh.pids_encoded) == \
-        (r_co.rows, r_co.bytes_in, r_co.pids_encoded)
-    m_sh, m_co = ChunkStore(sh_dir).metrics(), ChunkStore(co_dir).metrics()
-    for k in ("chunks", "pids", "rows", "bytes_in"):
-        assert m_sh[k] == m_co[k], (k, m_sh[k], m_co[k])
+                            salt_key="url", num_pids=12, salt=4)
+    m_sh = ChunkStore(sh_dir).metrics()
+    assert (r_sh.rows, m_sh["rows"]) == (ROWS, ROWS)
+    assert (m_sh["pids"], m_sh["bytes_in"]) == \
+        (r_sh.pids_encoded, r_sh.bytes_in)
     snap = ChunkStore(sh_dir).current_snapshot()
     assert len(snap["manifests"]) > 1          # one shard per task
     assert set(snap["manifest_n"]) == set(snap["manifests"])
     v = verify_roundtrip(corpus, decode_store(spark, sh_dir), key="url")
     assert v.ok, v
-    # resume works identically off a sharded commit, including the
+    # resume works off a sharded commit, including the
     # broadcast anti-join path used when the committed set is too large
     # for isin literals
     from omi_cpp_parquet_wide_record_spark.operators import encode as E
@@ -151,7 +153,7 @@ def test_distributed_planning_matches_driver(spark, corpus, tmp_path):
     chunk-file list never materializes on the driver (Iceberg-style
     distributed planning for corpus-scale stores). Results must equal
     driver planning exactly: plain scans, numeric zone-pruned filtered
-    scans, projections, and sequence-scoped delete branching."""
+    scans, projections, and sequence-scoped deletes."""
     import datetime
     out = str(tmp_path / "store")
     encode_dataframe(corpus, out, partition_by=["lang"], salt_key="url",
@@ -171,7 +173,7 @@ def test_distributed_planning_matches_driver(spark, corpus, tmp_path):
     pa_ = decode_store(spark, out, columns=["url", "lang"],
                        planning="distributed")
     assert pa_.columns == ["url", "lang"] and pa_.count() == ROWS
-    # sequence-scoped deletes: epoch branching must agree across modes
+    # sequence-scoped deletes must agree across modes
     from omi_cpp_parquet_wide_record_spark.operators.maintenance import (
         delete_rows,
     )
@@ -414,7 +416,7 @@ def test_schema_evolution_add_column(spark, tmp_path):
 
 def test_merge_on_read_deletes_and_compaction(spark, tmp_path):
     """Row-level deletes: an equality-delete file commits in O(1) (no chunk
-    rewritten); readers anti-join the keys; time travel still sees the
+    rewritten); readers drop the keys; time travel still sees the
     pre-delete table; compaction materializes the deletes."""
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import decode_store
@@ -752,8 +754,8 @@ def test_bloom_filter_pruning_on_equality(spark, tmp_path):
     # int equality still handled by zone maps (bloom only on bytes-like)
     one = decode_store(spark, out, filters=[("id", "==", 77)]).collect()
     assert len(one) == 1 and one[0].url.endswith("/77")
-    # distributed planning probes the same blooms as a vectorized UDF
-    # over the manifest rows — identical results on hit and miss
+    # distributed planning probes the same blooms, one manifest per
+    # task — identical results on hit and miss
     dgot = decode_store(spark, out,
                         filters=[("url", "==",
                                   "https://example.org/page/1234")],
@@ -769,10 +771,9 @@ def test_pruning_parity_driver_vs_distributed(spark, tmp_path):
     for string zone-map filters and (multi-literal) bloom equality — at
     corpus scale distributed planning is mandatory, so a plan that prunes
     less there would quietly lose exactly the point-lookup wins."""
-    import os
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
+        prune_files,
     )
     out = str(tmp_path / "store")
     df = spark.range(0, 4000).select(
@@ -785,8 +786,6 @@ def test_pruning_parity_driver_vs_distributed(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
 
     cases = [
         # string range: zone maps on url bounds
@@ -807,9 +806,7 @@ def test_pruning_parity_driver_vs_distributed(spark, tmp_path):
     ]
     for filters in cases:
         drv = prune_files(m, filters)
-        dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, filters)
-                      .collect())
+        dist = _distributed_files(spark, out, filters)
         assert drv == dist, (filters, len(drv), len(dist))
     # a real string-pruned case must actually prune
     assert len(prune_files(
@@ -823,12 +820,11 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
     filtered read must return exactly the rows a full decode +
     post-filter returns (over-pruning is silent data loss), and driver
     vs distributed planning must open the same file set."""
-    import os
     import random
 
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
+        prune_files,
     )
     rnd = random.Random(20260817)
     N = 6000
@@ -848,8 +844,6 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
 
     def rand_filter():
         col = rnd.choice(["id", "v", "key", "cat", "w"])
@@ -899,9 +893,7 @@ def test_pruning_fuzz_never_loses_rows(spark, tmp_path):
         assert got == want, (trial, filters, len(got), len(want))
         if trial % 5 == 0:   # cross-mode parity on a sample of trials
             drv = prune_files(m, filters)
-            dist = sorted(r.chunk_file for r in
-                          distributed_file_plan(spark, paths, filters)
-                          .collect())
+            dist = _distributed_files(spark, out, filters)
             assert drv == dist, (trial, filters)
     # Iceberg semantics: a filter may reference a non-projected column —
     # it decodes for the residual filter and drops in the projection
@@ -983,15 +975,12 @@ def test_array_columns_roundtrip(spark, tmp_path):
 
 
 def test_string_pruning_unicode_edges(spark, tmp_path):
-    """String zone-map/bloom pruning on non-ASCII data: distributed
-    planning compares UTF-8 binary, the driver path Python strings —
-    both must equal code-point order on astral-plane, combining-char,
-    CJK, and empty-string bounds, with no row ever lost."""
-    import os
-
+    """String zone-map/bloom pruning on non-ASCII data: comparisons must
+    follow code-point order on astral-plane, combining-char, CJK, and
+    empty-string bounds in both planning modes, with no row ever lost."""
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
+        prune_files,
     )
     vals = ["", "a", "zz", "éclair", "中文", "\U0001F600emoji",
             "Ácombining", "￿", "~tilde",
@@ -1006,8 +995,6 @@ def test_string_pruning_unicode_edges(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
     cases = [
         [("s", ">=", "中")], [("s", "<", "b")],
         [("s", "==", "\U0001F600emoji5")], [("s", ">=", "\U0001F600")],
@@ -1029,8 +1016,7 @@ def test_string_pruning_unicode_edges(spark, tmp_path):
                      .select("id").collect())
         assert got == want, (flt, len(got), len(want))
         drv = prune_files(m, flt)
-        dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, flt).collect())
+        dist = _distributed_files(spark, out, flt)
         assert drv == dist, (flt, drv, dist)
 
 
@@ -1076,7 +1062,7 @@ def test_in_list_filter_pushdown(spark, tmp_path):
     distributed planning must open the same file set."""
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
+        prune_files,
     )
     out = str(tmp_path / "store")
     df = spark.range(0, 4000).select(
@@ -1108,16 +1094,11 @@ def test_in_list_filter_pushdown(spark, tmp_path):
     miss = prune_files(m, [("url", "in", ["nope://a", "nope://b"])])
     assert len(miss) < n_files / 2
     # driver/distributed parity on IN (string and numeric)
-    snap = store.current_snapshot()
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
     for filters in ([("url", "in", urls)],
                     [("url", "in", ["nope://a", "nope://b"])],
                     [("id", "in", [5, 77, 9999999])]):
         drv = prune_files(m, filters)
-        dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, filters)
-                      .collect())
+        dist = _distributed_files(spark, out, filters)
         assert drv == dist, (filters, len(drv), len(dist))
     # distributed-mode results match driver-mode results
     a = decode_store(spark, out, filters=[("url", "in", urls)])
@@ -1185,11 +1166,9 @@ def test_nested_zone_map_pruning(spark, tmp_path):
     AND apply exact residuals. Checks: real file reduction, residual
     exactness vs full-decode + the equivalent Spark filter, and
     driver/distributed planning parity."""
-    import os
-
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
+        prune_files,
     )
     N = 4000
     # embedding length and values both correlate with id, and the store
@@ -1216,8 +1195,6 @@ def test_nested_zone_map_pruning(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
     all_files = prune_files(m, [])
 
     # 1) pruning actually reduces the file set on nested filters
@@ -1254,9 +1231,7 @@ def test_nested_zone_map_pruning(spark, tmp_path):
         assert got == want and want, (filters, len(got), len(want))
         # 3) driver/distributed parity on the same chunk-file set
         drv = prune_files(m, filters)
-        dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, filters)
-                      .collect())
+        dist = _distributed_files(spark, out, filters)
         assert drv == dist, (filters, len(drv), len(dist))
 
     # 4) filter on a non-projected nested column decodes it for the
@@ -1274,12 +1249,11 @@ def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
     c#len / c#val / c#f: and scalar filters must return exactly the
     full-decode + post-filter rows (over-pruning on the new stats would
     be silent data loss), driver == distributed file sets."""
-    import os
     import random
 
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
+        prune_files,
     )
     rnd = random.Random(20260818)
     N = 3000
@@ -1299,8 +1273,6 @@ def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
 
     def rand_filter():
         kind = rnd.choice(["len", "val", "fld", "scalar"])
@@ -1344,9 +1316,7 @@ def test_nested_pruning_fuzz_never_loses_rows(spark, tmp_path):
         assert got == want, (trial, filters, len(got), len(want))
         if trial % 4 == 0:
             drv = prune_files(m, filters)
-            dist = sorted(r.chunk_file for r in
-                          distributed_file_plan(spark, paths, filters)
-                          .collect())
+            dist = _distributed_files(spark, out, filters)
             assert drv == dist, (trial, filters)
 
 
@@ -1355,7 +1325,7 @@ def test_delete_scoping_reads_each_manifest_once(spark, tmp_path,
     """Driver planning with sequence-scoped deletes must not re-read
     manifest parquets to learn commit epochs — commit_n rides the
     manifest table the planner loads anyway (one read per manifest
-    total, delete or no delete)."""
+    total, delete or no delete), for decode_store and the owrc reader."""
     from pyspark.sql import functions as F
 
     from omi_cpp_parquet_wide_record_spark.operators import encode as enc
@@ -1391,6 +1361,17 @@ def test_delete_scoping_reads_each_manifest_once(spark, tmp_path,
     assert calls["n"] == n_manifests, (calls["n"], n_manifests)
     # rows 10-19 deleted from commit 0, 10-14 re-inserted after -> 395
     assert got == 395, got
+    # the owrc DataSource plans through the same ScanPlan: one read per
+    # manifest there too, and the same rows
+    from omi_cpp_parquet_wide_record_spark.sources.owrc_source import (
+        OwrcDataSource,
+    )
+    calls["n"] = 0
+    ds = OwrcDataSource({"path": out})
+    reader = ds.reader(ds.schema())
+    parts = reader.partitions()
+    assert calls["n"] == n_manifests, (calls["n"], n_manifests)
+    assert sum(b.num_rows for p in parts for b in reader.read(p)) == 395
 
 
 def test_upsert_single_commit_merge(spark, tmp_path):
@@ -1634,10 +1615,9 @@ def test_null_count_pruning(spark, tmp_path):
     counts: chunks with zero nulls can't serve IS NULL, all-null chunks
     (which carry no zone-map stats at all) can't serve IS NOT NULL —
     and both planning modes open the same files."""
-    import os
     from pyspark.sql import functions as F
     from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan, prune_files,
+        prune_files,
     )
     # sorted by id so chunks are id-contiguous: v is NULL only for
     # id < 1000 -> the null rows concentrate in a few chunks
@@ -1650,15 +1630,12 @@ def test_null_count_pruning(spark, tmp_path):
     store = ChunkStore(out)
     snap = store.current_snapshot()
     m = store.manifest_table(snap)
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
     n_all = len(prune_files(m, []))
     for flt, want in ([("v", "is_null", None)], 1000), \
                      ([("v", "is_not_null", None)], 7000):
         pruned = prune_files(m, flt)
         assert len(pruned) < n_all, (flt, len(pruned), n_all)
-        dist = sorted(r.chunk_file for r in
-                      distributed_file_plan(spark, paths, flt).collect())
+        dist = _distributed_files(spark, out, flt)
         assert pruned == dist, flt
         assert decode_store(spark, out, filters=flt).count() == want
     # DataSource pushdown: isNull()/isNotNull() reach the same pruning
@@ -1677,11 +1654,7 @@ def test_rewrite_small_chunks_binpack(spark, tmp_path):
     in-place rewrite coalesces them under ONE pid-scoped rewrite commit —
     same rows, far fewer chunks, time travel intact, incremental readers
     skip the rewrite and still see the original appends."""
-    import os
     from pyspark.sql import functions as F
-    from omi_cpp_parquet_wide_record_spark.operators.decode import (
-        distributed_file_plan,
-    )
     from omi_cpp_parquet_wide_record_spark.operators.maintenance import (
         rewrite_small_chunks,
     )
@@ -1705,19 +1678,10 @@ def test_rewrite_small_chunks_binpack(spark, tmp_path):
         assert got.count() == 6000
         assert sorted(r.id for r in got.collect()) == list(range(6000))
     m = store.manifest_table()
-    paths = [os.path.join(store.manifests_dir, x)
-             for x in snap["manifests"]]
     drv = sorted(set(m.column("chunk_file").to_pylist()))
-    # distributed planning must exclude the rewritten-away rows too
-    from omi_cpp_parquet_wide_record_spark.plans.snapshot import (
-        ChunkStore as CS,
-    )
-    dist = set()
-    for p, mn in zip(paths, snap["manifests"]):
-        dp = sorted(CS.rewritten_pids_for(snap, mn))
-        dist.update(r.chunk_file for r in distributed_file_plan(
-            spark, [p], None, drop_pids=dp).collect())
-    assert drv == sorted(dist)
+    # distributed planning must exclude the rewritten-away rows too: each
+    # task drops the pids a later rewrite superseded in its manifest
+    assert drv == _distributed_files(spark, out)
     # time travel: pre-rewrite snapshot still reads the ORIGINAL layout
     old = decode_store(spark, out, snapshot=n0)
     assert old.count() == 6000

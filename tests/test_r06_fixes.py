@@ -187,3 +187,15 @@ def test_engine_fingerprint_matches_under_zipimport(tmp_path):
         [sys.executable, "-c", code], capture_output=True, text=True,
         check=True).stdout.strip()
     assert zip_fp == local_fp
+
+
+def test_fingerprint_archive_walk_stops_at_root(tmp_path):
+    """The zipimport fallback finds the archive holding the package by
+    walking up parent directories. With no archive on the path the walk
+    must end at the filesystem root, where dirname is a fixed point."""
+    from omi_cpp_parquet_wide_record_spark.version import _enclosing_file
+    assert _enclosing_file(str(tmp_path / "no" / "archive" / "pkg")) is None
+    assert _enclosing_file("relative/pkg") is None
+    archive = tmp_path / "deps.zip"
+    archive.write_bytes(b"")
+    assert _enclosing_file(str(archive / "pkg" / "codecs")) == str(archive)
